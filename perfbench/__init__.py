@@ -1,0 +1,6 @@
+"""Benchmark for trafficbigdatasearch_spark: closed-loop traffic dashboards
+and a corpus-curation batch, with a traced per-layer split.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
